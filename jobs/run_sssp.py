@@ -6,8 +6,9 @@ Usage:
       [--partitions P] [--max-iter N] [--checkpoint-dir DIR] [--resume-from DIR]
       [--store-dir DIR] [--incremental] [--state-store-dir DIR]
 
-``--incremental`` keeps the vertex state in a bucketed store so sparse
-wavefront rounds rewrite only touched buckets (O(frontier), not O(|V|));
+``--incremental`` keeps the vertex state in the delta-version store: each
+round appends only its changed rows, so sparse wavefront rounds cost
+O(frontier), not O(|V|);
 on a cluster pass a shared-FS --state-store-dir (defaults under
 --checkpoint-dir when set).
 """

@@ -18,23 +18,19 @@ library/PCConnectedComponents.java):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import PCEngine
-from ..statestore import default_state_dir as _default_state_dir
 from ..partition import (
     GraphBlocks,
     block_edge_source_index,
     build_blocks,
     ensure_block_store,
     unpack_block,
-    vertex_ids,
 )
+from .minfold import run_min_fold
 
 _I64_MAX = np.iinfo(np.int64).max
 
@@ -120,12 +116,13 @@ def connected_components(
     ``vertices`` (optional DataFrame[id]) adds isolated vertices that
     keep their own id as component (singleton rule, SURVEY.md §1.4).
 
-    ``incremental=True`` keeps the state in a BucketedStateStore so the
-    sparse tail rounds rewrite only the touched buckets — O(frontier)
-    per round instead of O(|V|) (engine.run docstring).  The store
-    lives at ``state_store_dir`` (default: ``checkpoint_dir/statestore``
-    when checkpointing, else a fresh local temp dir — pass a shared-FS
-    path on a cluster).
+    ``incremental=True`` keeps the state in the delta-version store:
+    each round appends only its changed rows, so the sparse tail rounds
+    cost O(frontier) instead of O(|V|) (engine.run docstring).  The
+    store lives at ``state_store_dir`` (default: ``checkpoint_dir/
+    statestore`` when checkpointing, else a fresh local temp dir — pass
+    a shared-FS path on a cluster).  ``delta`` only accepts True;
+    False raises ``ValueError``.
     """
     sym = symmetrize(edges)
     if blocks is None:
@@ -138,95 +135,17 @@ def connected_components(
             blocks = build_blocks(
                 spark, sym, num_partitions, salt_threshold=salt_threshold
             )
-    engine = PCEngine(
-        spark, checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every
-    )
 
-    start_step = 0
-    resume_manifest = None
-    ckpt_init = True  # initial-state checkpoint (engine._run_loop)
-    if resume_from is not None:
-        resumed = engine.resume(resume_from)
-    else:
-        resumed = None
-    if resumed is not None:
-        state, frontier, meta = resumed
-        start_step = int(meta["superstep"])
-        engine.checkpoint_dir = engine.checkpoint_dir or resume_from
-        if "manifest" in meta:  # round was committed by the incremental loop
-            incremental = True
-            resume_manifest = meta["manifest"]
-            n_buckets = int(meta.get("n_buckets", n_buckets))
-            state_store_dir = (
-                state_store_dir
-                or meta.get("state_store_dir_resolved")
-                or os.path.join(resume_from, "statestore")
-            )
-    else:
-        if blocks.vertices_path is not None and vertices is None:
-            vset = spark.read.parquet(blocks.vertices_path).select("id")
-            # initial state = a cheap deterministic census scan: skip
-            # materializing it before round 1 (engine.run docstring)
-            ckpt_init = False
-        else:
-            vset = vertex_ids(sym)
-            if vertices is not None:
-                vset = vset.union(vertices.select("id")).distinct()
-        state = vset.select(
+    state, history = run_min_fold(
+        spark, blocks, cc_kernel, "dst long, msg long",
+        "connected_components", sym, vertices,
+        lambda vset: vset.select(
             "id", F.col("id").alias("value"), F.lit(True).alias("changed")
-        )
-        # engine derives the initial frontier from the CHECKPOINTED
-        # state (all rows changed=True) — an explicit pre-checkpoint
-        # frontier would re-execute the vset init in round 1
-        frontier = None
-
-    def update(state_df, msgs, step):
-        # string expressions: a handful of py4j round-trips per round
-        # instead of one per Column op (see pagerank.update)
-        folded = msgs.groupBy("dst").agg(F.expr("min(msg) as msg"))
-        joined = state_df.select("id", "value").join(
-            folded, F.expr("id = dst"), "left"
-        )
-        return joined.selectExpr(
-            "id",
-            "least(value, msg) as value",
-            "coalesce(msg < value, false) as changed",
-        )
-
-    if incremental and state_store_dir is None:
-        state_store_dir = _default_state_dir(checkpoint_dir, "cc")
-
-    state, history = engine.run(
-        blocks=blocks,
-        state=state,
-        frontier=frontier,
-        kernel=cc_kernel,
-        msg_schema="dst long, msg long",
-        update=update,
-        frontier_fn=lambda s: s.filter("changed").select("id", "value"),
-        # active-count rides the round's materializing job (observe)
-        metrics_exprs=[
-            F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("changed")
-        ],
-        metrics_post=lambda obs, step: {"active": int(obs["changed"] or 0)},
-        max_iter=max_iter,
-        start_step=start_step,
-        algorithm="connected_components",
-        # CC's frontier collapses after ~3 rounds; skip untouched blocks
-        # in the sparse tail instead of shipping the full topology
-        # through Arrow each round.
-        prefilter_blocks=True,
-        strict=strict,
-        state_store_dir=state_store_dir if incremental else None,
-        n_buckets=n_buckets,
-        resume_manifest=resume_manifest,
-        # CC/SSSP merge = min-fold + strict improvement: the exact
-        # contract the delta-version store needs (engine.run docstring).
-        # delta=False falls back to the bucket-rewrite incremental loop
-        # (kept for A/B benchmarking; delta is strictly O(changed)).
-        monotone="min" if delta else None,
-        max_versions=max_versions,
-        post_superstep=post_superstep,
-        checkpoint_initial_state=ckpt_init,
+        ),
+        max_iter=max_iter, checkpoint_dir=checkpoint_dir,
+        checkpoint_every=checkpoint_every, resume_from=resume_from,
+        incremental=incremental, state_store_dir=state_store_dir,
+        n_buckets=n_buckets, max_versions=max_versions, delta=delta,
+        strict=strict, post_superstep=post_superstep,
     )
     return state.select("id", F.col("value").alias("component")), history

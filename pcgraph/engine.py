@@ -44,6 +44,11 @@ Every ``checkpoint_every`` rounds state+frontier go to Parquet with a
 ``_meta.json`` carrying superstep number, metrics, per-partition
 frontier counts and a parent pointer, so runs resume mid-iteration
 (north rule: resumable with per-partition lineage).
+
+Monotone (min/max-fold) algorithms can instead keep their state in a
+``DeltaStateStore`` (statestore.py): each round appends only its changed
+rows, and the round meta records the store manifest instead of a state
+copy.  Both state models run under the same round loop (``_run_loop``).
 """
 
 from __future__ import annotations
@@ -53,12 +58,14 @@ import os
 import time
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .iohelpers import fs_exists, fs_list_dirs, read_json, write_json_atomic
 from .partition import GraphBlocks
-from .statestore import BucketedStateStore, DeltaStateStore
+from .statestore import DeltaStateStore
 
 META_NAME = "_meta.json"
 
@@ -66,10 +73,23 @@ META_NAME = "_meta.json"
 # count (see _messages).  128k edges ~= a few ms of vectorized kernel
 # work — big enough to amortize the per-task python-runner protocol
 # cost, small enough that the cap (one block per task) still binds for
-# any graph that matters at scale.  Env override for benchmarking.
-_EDGES_PER_KERNEL_TASK = int(
-    os.environ.get("PCGRAPH_KERNEL_EDGES_PER_TASK", str(128 * 1024))
-)
+# any graph that matters at scale.
+_EDGES_PER_KERNEL_TASK = 128 * 1024
+
+# Storage level of the per-round state localCheckpoint: PySpark's
+# SERIALIZED level.  The state is scanned twice per round (frontier
+# route + merge), and the A/B at 316M edges (BENCH/pr_steady_316m_r4.json)
+# measured the deserialized level re-reading 7.4 GB of spilled object
+# rows per round (object form overflows the storage pool) vs 0.87 GB
+# serialized, with 8x less GC and the best wall time — and at cluster
+# scale compact state is what keeps 10^9-vertex checkpoints
+# memory-resident.
+_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+
+# Folded-message count at or below which the delta store's improvement
+# join broadcasts the messages: sparse rounds scan the touched buckets
+# once, shuffle-free.
+_DELTA_BROADCAST_ROWS = 1_000_000
 
 
 def _round_dir(checkpoint_dir: str, step: int) -> str:
@@ -148,6 +168,301 @@ def _free_checkpoint(df: DataFrame) -> None:
         pass
 
 
+def _check_targets(dsts: DataFrame, ids: DataFrame) -> None:
+    """Reference parity ("Target vertex does not exist!",
+    PartitionCentricIteration.java:216-227): every message ``dst`` must
+    be an ``id`` of the state — one anti-join action."""
+    unknown = (
+        dsts.select("dst")
+        .join(ids.select(F.col("id").alias("dst")), on="dst", how="left_anti")
+        .count()
+    )
+    if unknown:
+        raise ValueError(
+            f"Target vertex does not exist! ({unknown} message(s) "
+            "target ids absent from the vertex set)"
+        )
+
+
+class _CheckpointedState:
+    """State backend that materializes the WHOLE state every round:
+    ``update`` merges the messages, the observation rides the
+    materializing action, and the result is ``localCheckpoint``-ed — or
+    written to parquet and read back on a checkpoint round (module
+    docstring)."""
+
+    def __init__(self, engine, state, frontier, update, frontier_fn,
+                 metrics_exprs, metrics_post, algorithm, strict, state_cols,
+                 checkpoint_initial_state):
+        self.engine = engine
+        self.update = update
+        self.frontier_fn = frontier_fn
+        self.metrics_exprs = metrics_exprs
+        self.metrics_post = metrics_post
+        self.algorithm = algorithm
+        self.strict = strict
+        self.state_cols = state_cols
+        # The initial state becomes the first opaque plan; the first
+        # round's merge pays one state-side shuffle into hash(id)
+        # partitioning, every later round inherits it from the previous
+        # round's checkpointed merge output (no Exchange, no Sort).
+        #
+        # ``checkpoint_initial_state=False`` (algorithms pass it when
+        # the initial state is a cheap deterministic scan — the store's
+        # vertex census): round 1 then embeds the scan directly.  The
+        # state subtree appears twice in the round-1 plan (frontier
+        # branch + merge branch), i.e. the census is read at most twice
+        # — cheaper than materializing an O(|V|) checkpoint first,
+        # at every scale.  The per-round checkpoint of the MERGE output
+        # (the lineage-cut that keeps rounds structurally identical) is
+        # unaffected.
+        if checkpoint_initial_state:
+            state = state.localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+        self.state = state
+        self.frontier = frontier_fn(state) if frontier is None else frontier
+
+    def advance(self, msgs: DataFrame, step: int, durable: bool) -> dict:
+        state = self.state
+        if self.strict:
+            msgs = msgs.persist()
+            _check_targets(msgs, state)
+        new_state = self.update(state, msgs, step)
+        obs: Observation | None = None
+        if self.metrics_exprs:
+            # Evaluated as a side-effect of this round's single
+            # materializing action — no separate aggregation pass.
+            # Attached on TOP of the merge plan; the checkpoint /
+            # write discards the plan, so the node fires exactly
+            # once and never survives into later rounds.
+            obs = Observation(f"pcgraph_{self.algorithm}_step{step}")
+            action_src = new_state.observe(obs, *self.metrics_exprs)
+        else:
+            action_src = new_state
+        if self.state_cols is not None:
+            # metric-only columns end at the observation: project
+            # them away BELOW the checkpoint (partitioning on id is
+            # preserved through Project/CollectMetrics)
+            action_src = action_src.select(*self.state_cols)
+
+        if durable:
+            path = os.path.join(
+                _round_dir(self.engine.checkpoint_dir, step), "state.parquet"
+            )
+            # the write is the materializing action (fires observe)
+            action_src.write.mode("overwrite").parquet(path)
+            # A parquet read-back has no partitioning metadata: the
+            # next round pays one state-side shuffle — the durable-
+            # checkpoint tax, once per checkpoint_every rounds.
+            new_state = self.engine.spark.read.parquet(path)
+        else:
+            # THE materializing action of the round.  The returned
+            # LogicalRDD keeps the merge's hash(id) partitioning +
+            # sort order (Spark 4.x), so next round's merge has no
+            # state-side Exchange/Sort; the opaque plan makes the
+            # message branch's lineage start at an RDD leaf, so no
+            # self-join dedup / no recompute (module docstring).
+            new_state = action_src.localCheckpoint(
+                eager=True, storageLevel=_CKPT_LEVEL
+            )
+
+        if obs is None:
+            metrics = {}
+        elif self.metrics_post:
+            metrics = self.metrics_post(dict(obs.get), step)
+        else:
+            metrics = dict(obs.get)
+        self.frontier = self.frontier_fn(new_state)
+        if "active" not in metrics:
+            # one cheap scan of the checkpointed state (no shuffle)
+            metrics["active"] = self.frontier.count()
+        if self.strict:
+            msgs.unpersist()
+        # Free the PREVIOUS round's checkpoint blocks now: the new
+        # state is fully materialized, and block storage holding
+        # every round's ~|V| object-form rows starves execution
+        # memory (UnifiedMemoryManager eviction churn, measured).
+        _free_checkpoint(state)
+        self.state = new_state
+        return metrics
+
+    def settle(self, metrics: dict) -> None:
+        pass
+
+    def commit(self, blocks: GraphBlocks, step: int, metrics: dict) -> None:
+        self.engine._commit_round(blocks, step, self.frontier, metrics)
+
+    def result(self) -> DataFrame:
+        return self.state
+
+
+class _DeltaState:
+    """State backend over a ``DeltaStateStore`` for monotone merges:
+    each round writes ONLY its changed rows — O(changed), not O(|V|).
+
+    Per round: kernel messages folded per dst (min/max — ONE small
+    aggregate, persisted, its count is the kernel-running action),
+    a scan of the touched buckets' versions joined against the
+    folded messages (broadcast when the fold is small: sparse
+    rounds never shuffle state), strict-improvement filter, and an
+    append-only write of the improvements as a new store version —
+    which doubles as the next frontier.  Reads reconcile duplicate
+    ids with the same min the algorithm folds with, so ordering is
+    immaterial; compaction keeps per-bucket version lists bounded.
+    """
+
+    def __init__(self, engine, store, state, frontier, frontier_fn,
+                 msg_schema, metrics_exprs, metrics_post, algorithm, strict,
+                 resume_manifest):
+        self.engine = engine
+        self.store = store
+        self.metrics_exprs = metrics_exprs
+        self.metrics_post = metrics_post
+        self.algorithm = algorithm
+        self.strict = strict
+        self.fold = F.min if store.monotone == "min" else F.max
+        # Canonicalize the VALUE type to what every LATER version will
+        # hold: delta rows carry the folded message as `value`, so v0
+        # must already use the message's type — an int32-valued vertex
+        # table would otherwise write v0 as int and v1+ as long, and
+        # the multi-version parquet read fails on the physical-type
+        # mismatch.  The id column keeps ITS type: blocks.route hashes
+        # it, and xxhash64(int32) != xxhash64(long) for the same value
+        # (bucket_expr casts internally for the same reason).
+        msg_type = StructType.fromDDL(msg_schema)["msg"].dataType
+        if resume_manifest is not None:
+            store.restore(resume_manifest)
+            if frontier is None:
+                raise ValueError(
+                    "incremental resume requires the committed round's "
+                    "frontier (engine.resume provides it)"
+                )
+        else:
+            canon = [
+                F.col("id"),
+                F.col("value").cast(msg_type).alias("value"),
+            ] + [F.col(c) for c in state.columns if c not in ("id", "value")]
+            store.init(state.select(*canon))  # v0 = full state
+            if frontier is None:
+                frontier = frontier_fn(store.read_version(0))
+        self.frontier = frontier
+        self.empty_frontier = engine.spark.createDataFrame(
+            [], StructType.fromDDL("id long").add("value", msg_type)
+        )
+
+    def advance(self, msgs: DataFrame, step: int, durable: bool) -> dict | None:
+        store, fold = self.store, self.fold
+        folded = msgs.groupBy("dst").agg(fold("msg").alias("msg")).persist()
+        n_msgs = folded.count()  # runs the kernels exactly once
+        if n_msgs == 0:
+            folded.unpersist()
+            return None
+        active_buckets = sorted(
+            r[0]
+            for r in folded.select(store.bucket_expr(F.col("dst")).alias("b"))
+            .distinct()
+            .collect()
+        )
+        raw = store.read_buckets_raw(active_buckets)
+        if self.strict:
+            # O(touched buckets), not O(|V|): an unknown dst hashes
+            # into its own bucket, and active_buckets covers every
+            # message's bucket — so the already-pruned `raw` read is
+            # a sufficient universe for the missing-vertex anti-join
+            # (a full-manifest read here made every strict round
+            # scan the whole store; r4 VERDICT "what's wrong" #1).
+            if raw is None:
+                # n_msgs counts folded (distinct-dst) rows, not raw
+                # messages — say so (ADVICE r5: keep the two strict
+                # paths' diagnostics consistent)
+                raise ValueError(
+                    f"Target vertex does not exist! ({n_msgs} distinct "
+                    "target id(s) absent from the vertex set)"
+                )
+            _check_targets(folded, raw)
+        if raw is None:
+            folded.unpersist()
+            return None
+        fol = F.broadcast(folded) if n_msgs <= _DELTA_BROADCAST_ROWS else folded
+        cand = raw.join(fol, raw["id"] == fol["dst"], "inner")
+        cur = cand.groupBy("id").agg(
+            fold("value").alias("value"), fold("msg").alias("msg")
+        )
+        improved = (
+            F.col("msg") < F.col("value")
+            if store.monotone == "min"
+            else F.col("msg") > F.col("value")
+        )
+        delta = cur.filter(improved).select(
+            "id",
+            F.col("msg").alias("value"),
+            F.lit(True).alias("changed"),
+        )
+        obs = Observation(f"pcgraph_{self.algorithm}_step{step}")
+        exprs = self.metrics_exprs or [F.count(F.lit(1)).alias("changed")]
+        delta = (
+            delta.observe(obs, *exprs)
+            .select("id", "value")
+            .withColumn("bucket", store.bucket_expr(F.col("id")))
+        )
+        vid = store.write_delta(  # THE materializing action
+            delta,
+            num_partitions=min(
+                int(self.engine.spark.conf.get("spark.sql.shuffle.partitions")),
+                len(active_buckets),
+            ),
+        )
+        folded.unpersist()
+        observed = dict(obs.get)
+        if not self.metrics_exprs:
+            metrics = {}
+        elif self.metrics_post:
+            metrics = self.metrics_post(observed, step)
+        else:
+            metrics = observed
+        if "active" not in metrics:
+            metrics["active"] = int(observed.get("changed") or 0)
+        metrics.update(active_buckets=len(active_buckets), store_version=vid)
+        return metrics
+
+    def settle(self, metrics: dict) -> None:
+        vid = metrics["store_version"]
+        # protect the round's delta: its rows are the next frontier,
+        # read lazily below — compaction must not fold/delete it.
+        # Stagger to n_buckets/4 per round so a full-frontier phase
+        # (every bucket over budget at once) doesn't pay a
+        # full-state rewrite in a single round.
+        compacted = self.store.compact(
+            protect=vid, max_buckets=max(1, self.store.n_buckets // 4)
+        )
+        if compacted:
+            metrics["compacted_buckets"] = len(compacted)
+        self.frontier = (
+            self.store.read_version(vid)
+            if metrics["active"]
+            else self.empty_frontier
+        )
+
+    def commit(self, blocks: GraphBlocks, step: int, metrics: dict) -> None:
+        """The round meta's ``manifest`` (bucket -> version list) IS the
+        state pointer: per-partition lineage without re-copying the
+        state."""
+        store = self.store
+        meta = dict(metrics)
+        meta["manifest"] = {str(b): list(vs) for b, vs in store.manifest.items()}
+        meta["n_buckets"] = store.n_buckets
+        meta["monotone"] = store.monotone
+        meta["state_store_dir"] = _store_dir_for_meta(
+            self.engine.checkpoint_dir, store.root
+        )
+        self.engine._commit_round(
+            blocks, step, self.frontier, meta, write_state=False
+        )
+        store.mark_committed()
+
+    def result(self) -> DataFrame:
+        return self.store.read_reconciled()
+
+
 class PCEngine:
     """Generic partition-centric iteration runner.
 
@@ -166,8 +481,8 @@ class PCEngine:
         set (analog of setNewVertexValue's emit-on-change,
         VertexUpdateFunction.java:85-93); stays a LAZY projection of
         the checkpointed state (no second materialized copy per round);
-      * optional ``metrics_fn(new_state, step) -> dict`` — one action
-        over the materialized state (e.g. PageRank L1 delta); may set
+      * optional ``metrics_exprs``/``metrics_post`` — convergence
+        metrics observed inside the round's materializing job; may set
         ``active`` and ``converged``;
       * optional ``pre_superstep(step)`` / ``post_superstep(step,
         metrics)`` lifecycle hooks (reference parity:
@@ -180,41 +495,10 @@ class PCEngine:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 1,
-        partition_metrics: bool | None = None,
-        aqe_in_loop: bool = False,
-        checkpoint_storage_level: str | None = None,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        # Storage level for the per-round state localCheckpoint.
-        # Default: "MEMORY_AND_DISK" — PySpark's SERIALIZED level.  The
-        # state is scanned twice per round (frontier route + merge), and
-        # the A/B at 316M edges (BENCH/pr_steady_316m_r4.json) measured
-        # the deserialized default re-reading 7.4 GB of spilled object
-        # rows per round (object form overflows the storage pool) vs
-        # 0.87 GB serialized, with 8x less GC and the best wall time —
-        # and at cluster scale compact state is what keeps 10^9-vertex
-        # checkpoints memory-resident.  Override with
-        # PCGRAPH_CKPT_LEVEL=MEMORY_AND_DISK_DESER (or any StorageLevel
-        # name) to trade memory for the deser CPU back.
-        if checkpoint_storage_level is None:
-            checkpoint_storage_level = os.environ.get(
-                "PCGRAPH_CKPT_LEVEL", "MEMORY_AND_DISK"
-            )
-        from pyspark import StorageLevel
-
-        self._ckpt_level = getattr(StorageLevel, checkpoint_storage_level)
-        if partition_metrics is None:
-            partition_metrics = checkpoint_dir is not None
-        self.partition_metrics = partition_metrics
-        # AQE re-plans 3-4 query stages on the driver every superstep — a
-        # serial per-round cost that hits higher parallelism levels
-        # proportionally harder (Amdahl), and it buys nothing here: the
-        # loop's shuffle partitioning is fixed by construction and skew
-        # is handled by explicit salting (AQE cannot split applyInPandas
-        # groups anyway, SURVEY.md §4).  Off inside run(), restored after.
-        self.aqe_in_loop = aqe_in_loop
         self.history: list[dict] = []
 
     # ------------------------------------------------------------------
@@ -228,7 +512,6 @@ class PCEngine:
         update: Callable[[DataFrame, DataFrame, int], DataFrame],
         frontier_fn: Callable[[DataFrame], DataFrame],
         max_iter: int,
-        metrics_fn: Callable[[DataFrame, int], dict] | None = None,
         metrics_exprs: list | None = None,
         metrics_post: Callable[[dict, int], dict] | None = None,
         start_step: int = 0,
@@ -242,39 +525,32 @@ class PCEngine:
         n_buckets: int = 256,
         resume_manifest: dict | None = None,
         monotone: str | None = None,
-        delta_broadcast_rows: int = 1_000_000,
         max_versions: int = 8,
         checkpoint_initial_state: bool = True,
     ) -> tuple[DataFrame, list[dict]]:
         """Iterate to convergence.
 
-        ``monotone`` ("min" or "max") with ``state_store_dir`` switches
-        to the DELTA-VERSION incremental loop: the algorithm's merge
-        must be exactly "fold messages per dst with min (resp. max),
-        keep on strict improvement" over state rows ``(id, value,
-        changed)`` and messages ``(dst, msg)`` — CC's min-label and
-        SSSP's min-distance qualify.  In that mode ``update`` and
-        ``frontier_fn`` are bypassed after initialization (the engine
-        applies the monotone merge itself) and each round writes ONLY
-        its changed rows (O(changed)) as a new store version, with
-        min-reconciliation on read and per-bucket compaction
-        (``max_versions``) bounding read amplification.  ``delta_
-        broadcast_rows``: folded-message count at or below which the
-        improvement join broadcasts the messages (sparse rounds scan
-        the touched buckets once, shuffle-free).
+        One round loop runs over one of two state backends:
 
-        ``state_store_dir`` switches the loop to INCREMENTAL state
-        (BucketedStateStore): the state lives hash-bucketed on disk and
-        each round rewrites only the buckets its messages touch, making
-        sparse-frontier rounds O(frontier) instead of the classic
-        loop's O(|V|) per-round state materialization.  Requirements:
-        the algorithm must be a delta algorithm — ``update`` only
-        changes rows targeted by messages, and ``metrics_exprs`` must
-        be computable over the TOUCHED rows alone (CC/SSSP changed
-        counts qualify; PageRank's full-state L1 does not).  On a
-        cluster the directory must be on shared storage (hdfs/s3a).
-        ``resume_manifest`` (from a committed round's meta) resumes
-        against an existing store.
+          * checkpointed (default): ``update`` merges each round's
+            messages into the whole state, which the round materializes
+            once — ``localCheckpoint``, or a parquet write every
+            ``checkpoint_every`` rounds when ``checkpoint_dir`` is set;
+          * delta store (``state_store_dir`` set): the state lives
+            hash-bucketed on disk in a ``DeltaStateStore`` and each
+            round appends ONLY its changed rows (O(changed)) as a new
+            store version, with min-reconciliation on read and
+            per-bucket compaction (``max_versions``) bounding read
+            amplification.  ``monotone`` ("min" or "max") is required:
+            the algorithm's merge must be exactly "fold messages per
+            dst with min (resp. max), keep on strict improvement" over
+            state rows ``(id, value, changed)`` and messages ``(dst,
+            msg)`` — CC's min-label and SSSP's min-distance qualify.
+            ``update`` and ``frontier_fn`` are bypassed after
+            initialization (the engine applies the monotone merge
+            itself).  On a cluster the directory must be on shared
+            storage (hdfs/s3a).  ``resume_manifest`` (from a committed
+            round's meta) resumes against an existing store.
 
         ``state_cols``: columns to RETAIN in the per-round materialized
         state.  Metric-only columns (e.g. PageRank's prev_pr, consumed
@@ -299,19 +575,36 @@ class PCEngine:
         mode, zero-cost when off.
 
         ``metrics_exprs``/``metrics_post``: aggregate Columns evaluated
-        over the new state INSIDE the round's single materializing job
-        via ``DataFrame.observe`` (so convergence metrics cost zero
-        extra actions/passes — vs ``metrics_fn``, which runs its own
-        aggregation action).  ``metrics_post(observed_dict, step)``
-        turns the raw observed values into the metrics dict (and may
-        set ``active``/``converged``).  The observe node rides the
+        over the new state (the delta store: over the changed rows)
+        INSIDE the round's single materializing job via
+        ``DataFrame.observe``, so convergence metrics cost zero extra
+        actions/passes.  ``metrics_post(observed_dict, step)`` turns the
+        raw observed values into the metrics dict (and may set
+        ``active``/``converged``).  The observe node rides the
         checkpoint action only — it never enters the retained plan.
         """
+        if state_store_dir is not None and monotone is None:
+            raise ValueError(
+                "state_store_dir selects the delta state store, which "
+                "needs a monotone merge (monotone='min' or 'max'); the "
+                "bucket-rewrite store for other updates was removed"
+            )
+        store = None
+        if state_store_dir is not None:
+            store = DeltaStateStore(
+                self.spark, state_store_dir, n_buckets,
+                max_versions=max_versions, monotone=monotone,
+            )
         conf = self.spark.conf
         aqe_prev = conf.get("spark.sql.adaptive.enabled", "true")
         bcast_prev = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        if not self.aqe_in_loop:
-            conf.set("spark.sql.adaptive.enabled", "false")
+        # AQE re-plans 3-4 query stages on the driver every superstep — a
+        # serial per-round cost that hits higher parallelism levels
+        # proportionally harder (Amdahl), and it buys nothing here: the
+        # loop's shuffle partitioning is fixed by construction and skew
+        # is handled by explicit salting (AQE cannot split applyInPandas
+        # groups anyway, SURVEY.md §4).  Off inside run(), restored after.
+        conf.set("spark.sql.adaptive.enabled", "false")
         # The per-round merge join must NOT auto-broadcast the folded
         # messages: the broadcast build is an extra job every round
         # (each job has a fixed driver/py4j floor), while the sort-merge
@@ -319,102 +612,45 @@ class PCEngine:
         # ONE materializing job — the state side is exchange- and
         # sort-free from the previous round's checkpointed partitioning
         # (module docstring), so SMJ costs no extra shuffle.  Explicit
-        # F.broadcast hints (mirror route, delta-loop sparse fold) are
+        # F.broadcast hints (mirror route, delta-store sparse fold) are
         # unaffected by the threshold.
         conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            if state_store_dir is not None:
-                # A scalar-valued resume manifest (bucket -> version) is a
-                # legacy bucket-rewrite checkpoint; list-valued is delta.
-                legacy_manifest = resume_manifest is not None and any(
-                    not isinstance(v, (list, tuple))
-                    for v in resume_manifest.values()
-                )
-                delta_manifest = resume_manifest is not None and any(
-                    isinstance(v, (list, tuple))
-                    for v in resume_manifest.values()
-                )
-                if delta_manifest and monotone is None:
-                    # Routing a delta (list-valued) manifest into the
-                    # bucket-rewrite loop would die deep inside
-                    # BucketedStateStore.restore with an opaque
-                    # TypeError — name the mismatch instead.
-                    raise ValueError(
-                        "resume manifest is delta-versioned (list-valued "
-                        "version lists) but the delta loop was not "
-                        "selected (monotone=None); resume with the same "
-                        "mode the checkpoint was written with (e.g. "
-                        "delta=True in cc()/sssp())"
-                    )
-                if monotone is not None and not legacy_manifest:
-                    return self._run_loop_delta(
-                        blocks, state, frontier, kernel, msg_schema,
-                        frontier_fn, max_iter, metrics_exprs, metrics_post,
-                        start_step, algorithm, strict, pre_superstep,
-                        post_superstep, state_store_dir, n_buckets,
-                        resume_manifest, monotone, delta_broadcast_rows,
-                        max_versions, prefilter_blocks,
-                    )
-                return self._run_loop_incremental(
-                    blocks, state, frontier, kernel, msg_schema, update,
-                    frontier_fn, max_iter, metrics_exprs, metrics_post,
-                    start_step, algorithm, strict, state_cols,
-                    pre_superstep, post_superstep, state_store_dir,
-                    n_buckets, resume_manifest,
-                )
             return self._run_loop(
                 blocks, state, frontier, kernel, msg_schema, update,
-                frontier_fn, max_iter, metrics_fn, metrics_exprs,
-                metrics_post, start_step, algorithm, prefilter_blocks,
-                strict, state_cols, pre_superstep, post_superstep,
+                frontier_fn, max_iter, metrics_exprs, metrics_post,
+                start_step, algorithm, prefilter_blocks, strict, state_cols,
+                pre_superstep, post_superstep, store, resume_manifest,
                 checkpoint_initial_state,
             )
         finally:
             conf.set("spark.sql.adaptive.enabled", aqe_prev)
             conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_prev)
 
-    def _run_loop(
-        self,
-        blocks: GraphBlocks,
-        state: DataFrame,
-        frontier: DataFrame | None,
-        kernel: Callable,
-        msg_schema: str,
-        update: Callable[[DataFrame, DataFrame, int], DataFrame],
-        frontier_fn: Callable[[DataFrame], DataFrame],
-        max_iter: int,
-        metrics_fn: Callable[[DataFrame, int], dict] | None,
-        metrics_exprs: list | None,
-        metrics_post: Callable[[dict, int], dict] | None,
-        start_step: int,
-        algorithm: str,
-        prefilter_blocks: bool,
-        strict: bool,
-        state_cols: list[str] | None,
-        pre_superstep: Callable[[int], None] | None,
-        post_superstep: Callable[[int, dict], None] | None,
-        checkpoint_initial_state: bool = True,
-    ) -> tuple[DataFrame, list[dict]]:
-        # The initial state becomes the first opaque plan; the first
-        # round's merge pays one state-side shuffle into hash(id)
-        # partitioning, every later round inherits it from the previous
-        # round's checkpointed merge output (no Exchange, no Sort).
-        #
-        # ``checkpoint_initial_state=False`` (algorithms pass it when
-        # the initial state is a cheap deterministic scan — the store's
-        # vertex census): round 1 then embeds the scan directly.  The
-        # state subtree appears twice in the round-1 plan (frontier
-        # branch + merge branch), i.e. the census is read at most twice
-        # — cheaper than materializing an O(|V|) checkpoint first,
-        # at every scale.  The per-round checkpoint of the MERGE output
-        # (the lineage-cut that keeps rounds structurally identical) is
-        # unaffected.
-        if checkpoint_initial_state:
-            state = state.localCheckpoint(
-                eager=True, storageLevel=self._ckpt_level
+    def _run_loop(self, blocks, state, frontier, kernel, msg_schema, update,
+                  frontier_fn, max_iter, metrics_exprs, metrics_post,
+                  start_step, algorithm, prefilter_blocks, strict, state_cols,
+                  pre_superstep, post_superstep, store, resume_manifest,
+                  checkpoint_initial_state):
+        """The round skeleton (arguments as in ``run``; ``store`` is the
+        delta store, None for the checkpointed backend).  The backend
+        owns what differs between the two state models — init,
+        ``advance`` (merge the round's messages through its
+        materializing action and return the round's metrics),
+        ``settle`` (work outside ``round_sec``), ``commit`` (what the
+        round meta records) and the final state."""
+        if store is None:
+            backend = _CheckpointedState(
+                self, state, frontier, update, frontier_fn, metrics_exprs,
+                metrics_post, algorithm, strict, state_cols,
+                checkpoint_initial_state,
             )
-        if frontier is None:
-            frontier = frontier_fn(state)
+        else:
+            backend = _DeltaState(
+                self, store, state, frontier, frontier_fn, msg_schema,
+                metrics_exprs, metrics_post, algorithm, strict,
+                resume_manifest,
+            )
         wants_step = _kernel_wants_step(kernel)
         step = start_step
         while step < max_iter:
@@ -422,83 +658,22 @@ class PCEngine:
             round_t0 = time.monotonic()
             if pre_superstep is not None:
                 pre_superstep(step)
-            routed = blocks.route(frontier)
-
+            routed = blocks.route(backend.frontier)
             kernel_fn = _bind_step(kernel, step) if wants_step else kernel
             msgs, active_partitions = self._messages(
                 blocks, routed, kernel_fn, msg_schema, prefilter_blocks
             )
-            if strict:
-                msgs = msgs.persist()
-                unknown = (
-                    msgs.select("dst")
-                    .join(
-                        state.select(F.col("id").alias("dst")), on="dst",
-                        how="left_anti",
-                    )
-                    .count()
-                )
-                if unknown:
-                    raise ValueError(
-                        f"Target vertex does not exist! ({unknown} message(s) "
-                        "target ids absent from the vertex set)"
-                    )
-            new_state = update(state, msgs, step)
-            obs: Observation | None = None
-            if metrics_exprs:
-                # Evaluated as a side-effect of this round's single
-                # materializing action — no separate aggregation pass.
-                # Attached on TOP of the merge plan; the checkpoint /
-                # write discards the plan, so the node fires exactly
-                # once and never survives into later rounds.
-                obs = Observation(f"pcgraph_{algorithm}_step{step}")
-                action_src = new_state.observe(obs, *metrics_exprs)
-            else:
-                action_src = new_state
-            if state_cols is not None:
-                # metric-only columns end at the observation: project
-                # them away BELOW the checkpoint (partitioning on id is
-                # preserved through Project/CollectMetrics)
-                action_src = action_src.select(*state_cols)
-
-            do_ckpt = (
-                self.checkpoint_dir is not None and step % self.checkpoint_every == 0
+            durable = (
+                self.checkpoint_dir is not None
+                and step % self.checkpoint_every == 0
             )
-            if do_ckpt:
-                rdir = _round_dir(self.checkpoint_dir, step)
-                action_src.write.mode("overwrite").parquet(
-                    os.path.join(rdir, "state.parquet")
-                )  # the write is the materializing action (fires observe)
-                new_state = self.spark.read.parquet(
-                    os.path.join(rdir, "state.parquet")
-                )
-                # A parquet read-back has no partitioning metadata: the
-                # next round pays one state-side shuffle — the durable-
-                # checkpoint tax, once per checkpoint_every rounds.
-            else:
-                # THE materializing action of the round.  The returned
-                # LogicalRDD keeps the merge's hash(id) partitioning +
-                # sort order (Spark 4.x), so next round's merge has no
-                # state-side Exchange/Sort; the opaque plan makes the
-                # message branch's lineage start at an RDD leaf, so no
-                # self-join dedup / no recompute (module docstring).
-                new_state = action_src.localCheckpoint(
-                    eager=True, storageLevel=self._ckpt_level
-                )
-
-            if obs is not None:
-                observed = dict(obs.get)
-                metrics = (
-                    metrics_post(observed, step) if metrics_post else observed
-                )
-            elif metrics_fn:
-                metrics = metrics_fn(new_state, step)
-            else:
-                metrics = {}
-            new_frontier = frontier_fn(new_state)
-            if "active" not in metrics:
-                # one cheap scan of the checkpointed state (no shuffle)
-                metrics["active"] = new_frontier.count()
+            metrics = backend.advance(msgs, step, durable)
+            settled = metrics is not None
+            if not settled:
+                # no message reaches a stored vertex (only the delta
+                # store can tell before merging): nothing can change,
+                # converged by the emit-on-change contract
+                metrics = {"active": 0, "active_buckets": 0}
             metrics.update(
                 superstep=step,
                 algorithm=algorithm,
@@ -506,23 +681,16 @@ class PCEngine:
             )
             if active_partitions is not None:
                 metrics["active_partitions"] = active_partitions
-
-            if do_ckpt:
-                self._commit_round(blocks, step, new_frontier, metrics)
-            if strict:
-                msgs.unpersist()
-            # Free the PREVIOUS round's checkpoint blocks now: the new
-            # state is fully materialized, and block storage holding
-            # every round's ~|V| object-form rows starves execution
-            # memory (UnifiedMemoryManager eviction churn, measured).
-            _free_checkpoint(state)
-            state, frontier = new_state, new_frontier
+            if settled:
+                backend.settle(metrics)
+                if durable:
+                    backend.commit(blocks, step, metrics)
             self.history.append(metrics)
             if post_superstep is not None:
                 post_superstep(step, metrics)
             if metrics.get("converged") or metrics["active"] == 0:
                 break
-        return state, self.history
+        return backend.result(), self.history
 
     # ------------------------------------------------------------------
     def _bound_kernel(self, kernel_fn: Callable, store_path: str) -> Callable:
@@ -563,7 +731,7 @@ class PCEngine:
         prefilter_blocks: bool,
     ) -> tuple[DataFrame, int | None]:
         """One superstep's kernel application: routed frontier -> raw
-        messages (shared by the classic and incremental loops).
+        messages (shared by both state backends).
 
         The routed frontier is explicitly hash-partitioned into
         ``num_partitions`` (one CSR block per task) instead of letting
@@ -645,410 +813,6 @@ class PCEngine:
         return msgs, active_partitions
 
     # ------------------------------------------------------------------
-    def _run_loop_incremental(
-        self,
-        blocks: GraphBlocks,
-        state: DataFrame,
-        frontier: DataFrame | None,
-        kernel: Callable,
-        msg_schema: str,
-        update: Callable[[DataFrame, DataFrame, int], DataFrame],
-        frontier_fn: Callable[[DataFrame], DataFrame],
-        max_iter: int,
-        metrics_exprs: list | None,
-        metrics_post: Callable[[dict, int], dict] | None,
-        start_step: int,
-        algorithm: str,
-        strict: bool,
-        state_cols: list[str] | None,
-        pre_superstep: Callable[[int], None] | None,
-        post_superstep: Callable[[int, dict], None] | None,
-        state_store_dir: str,
-        n_buckets: int,
-        resume_manifest: dict | None,
-    ) -> tuple[DataFrame, list[dict]]:
-        """Delta-algorithm loop over a BucketedStateStore: every round's
-        state read AND write touch only the buckets the messages land
-        in, so a sparse tail round costs O(frontier) — vs the classic
-        loop's O(|V|) per-round checkpoint (PERF.md round-4 target #4).
-
-        Per round: kernel messages (persisted once), one tiny distinct-
-        collect of the messages' dst buckets, a partition-pruned read of
-        exactly those buckets, ``update`` merging messages into them,
-        and a versioned write of only those buckets (the materializing
-        action; any observe rides it).  The next frontier is read back
-        from the just-written version — rows untouched this round can
-        never be in it, which is exactly the changed-set semantics.
-        """
-        store = BucketedStateStore(self.spark, state_store_dir, n_buckets)
-        if resume_manifest is not None:
-            store.restore(resume_manifest)
-            if frontier is None:
-                raise ValueError(
-                    "incremental resume requires the committed round's "
-                    "frontier (engine.resume provides it)"
-                )
-        else:
-            store.init(state, step=start_step)
-            if frontier is None:
-                frontier = frontier_fn(store.read_version(start_step))
-        wants_step = _kernel_wants_step(kernel)
-        step = start_step
-        while step < max_iter:
-            step += 1
-            round_t0 = time.monotonic()
-            if pre_superstep is not None:
-                pre_superstep(step)
-            routed = blocks.route(frontier)
-            kernel_fn = _bind_step(kernel, step) if wants_step else kernel
-            msgs, _ = self._messages(
-                blocks, routed, kernel_fn, msg_schema, prefilter_blocks=False
-            )
-            # The round's FIRST action runs the kernels and caches the
-            # messages; everything after reads the (frontier-sized)
-            # cache — kernels never run twice.
-            msgs = msgs.persist()
-            active_buckets = sorted(
-                r[0]
-                for r in msgs.select(
-                    store.bucket_expr(F.col("dst")).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            if strict:
-                unknown = (
-                    msgs.select("dst")
-                    .join(
-                        store.read_full().select(F.col("id").alias("dst")),
-                        on="dst",
-                        how="left_anti",
-                    )
-                    .count()
-                )
-                if unknown:
-                    raise ValueError(
-                        f"Target vertex does not exist! ({unknown} message(s) "
-                        "target ids absent from the vertex set)"
-                    )
-            state_subset = store.read_buckets(active_buckets)
-            if state_subset is None:
-                # no message targets any stored vertex -> nothing can
-                # change; converged by the emit-on-change contract
-                msgs.unpersist()
-                metrics = {
-                    "active": 0,
-                    "superstep": step,
-                    "algorithm": algorithm,
-                    "round_sec": round(time.monotonic() - round_t0, 4),
-                    "active_buckets": 0,
-                }
-                self.history.append(metrics)
-                if post_superstep is not None:
-                    post_superstep(step, metrics)
-                break
-            merged = update(state_subset, msgs, step)
-            obs: Observation | None = None
-            if metrics_exprs:
-                obs = Observation(f"pcgraph_{algorithm}_step{step}")
-                merged = merged.observe(obs, *metrics_exprs)
-            if state_cols is not None:
-                merged = merged.select(*state_cols)
-            merged = merged.withColumn(
-                "bucket", store.bucket_expr(F.col("id"))
-            )
-            store.write_round(merged, step)  # THE materializing action
-            msgs.unpersist()
-            touched = store.read_version(step)
-            new_frontier = frontier_fn(touched)
-            if obs is not None:
-                observed = dict(obs.get)
-                metrics = (
-                    metrics_post(observed, step) if metrics_post else observed
-                )
-            else:
-                metrics = {}
-            if "active" not in metrics:
-                metrics["active"] = new_frontier.count()
-            metrics.update(
-                superstep=step,
-                algorithm=algorithm,
-                round_sec=round(time.monotonic() - round_t0, 4),
-                active_buckets=len(active_buckets),
-            )
-            do_ckpt = (
-                self.checkpoint_dir is not None
-                and step % self.checkpoint_every == 0
-            )
-            if do_ckpt:
-                metrics_meta = dict(metrics)
-                metrics_meta["manifest"] = {
-                    str(b): v for b, v in store.manifest.items()
-                }
-                metrics_meta["n_buckets"] = store.n_buckets
-                metrics_meta["state_store_dir"] = _store_dir_for_meta(
-                    self.checkpoint_dir, state_store_dir
-                )
-                self._commit_round(
-                    blocks, step, new_frontier, metrics_meta,
-                    write_state=False,
-                )
-                store.mark_committed()
-            frontier = new_frontier
-            self.history.append(metrics)
-            if post_superstep is not None:
-                post_superstep(step, metrics)
-            if metrics.get("converged") or metrics["active"] == 0:
-                break
-        return store.read_full(), self.history
-
-    # ------------------------------------------------------------------
-    def _run_loop_delta(
-        self,
-        blocks: GraphBlocks,
-        state: DataFrame,
-        frontier: DataFrame | None,
-        kernel: Callable,
-        msg_schema: str,
-        frontier_fn: Callable[[DataFrame], DataFrame],
-        max_iter: int,
-        metrics_exprs: list | None,
-        metrics_post: Callable[[dict, int], dict] | None,
-        start_step: int,
-        algorithm: str,
-        strict: bool,
-        pre_superstep: Callable[[int], None] | None,
-        post_superstep: Callable[[int, dict], None] | None,
-        state_store_dir: str,
-        n_buckets: int,
-        resume_manifest: dict | None,
-        monotone: str,
-        delta_broadcast_rows: int,
-        max_versions: int,
-        prefilter_blocks: bool = False,
-    ) -> tuple[DataFrame, list[dict]]:
-        """Monotone delta loop over a DeltaStateStore: each round writes
-        ONLY its changed rows — O(changed), not O(touched buckets).
-
-        Per round: kernel messages folded per dst (min/max — ONE small
-        aggregate, persisted, its count is the kernel-running action),
-        a scan of the touched buckets' versions joined against the
-        folded messages (broadcast when the fold is small: sparse
-        rounds never shuffle state), strict-improvement filter, and an
-        append-only write of the improvements as a new store version —
-        which doubles as the next frontier.  Reads reconcile duplicate
-        ids with the same min the algorithm folds with, so ordering is
-        immaterial; compaction keeps per-bucket version lists bounded.
-        """
-        store = DeltaStateStore(
-            self.spark, state_store_dir, n_buckets,
-            max_versions=max_versions, monotone=monotone,
-        )
-        fold = F.min if monotone == "min" else F.max
-        # Canonicalize the VALUE type to what every LATER version will
-        # hold: delta rows carry the folded message as `value`, so v0
-        # must already use the message's type — an int32-valued vertex
-        # table would otherwise write v0 as int and v1+ as long, and
-        # the multi-version parquet read fails on the physical-type
-        # mismatch.  The id column keeps ITS type: blocks.route hashes
-        # it, and xxhash64(int32) != xxhash64(long) for the same value
-        # (bucket_expr casts internally for the same reason).
-        from pyspark.sql.types import StructType
-
-        msg_type = StructType.fromDDL(msg_schema)["msg"].dataType
-        if resume_manifest is not None:
-            store.restore(resume_manifest)
-            if frontier is None:
-                raise ValueError(
-                    "incremental resume requires the committed round's "
-                    "frontier (engine.resume provides it)"
-                )
-        else:
-            canon = [
-                F.col("id"),
-                F.col("value").cast(msg_type).alias("value"),
-            ] + [F.col(c) for c in state.columns if c not in ("id", "value")]
-            store.init(state.select(*canon))  # v0 = full state
-            if frontier is None:
-                frontier = frontier_fn(store.read_version(0))
-        wants_step = _kernel_wants_step(kernel)
-        empty_frontier = self.spark.createDataFrame(
-            [], StructType.fromDDL("id long").add("value", msg_type)
-        )
-        step = start_step
-        while step < max_iter:
-            step += 1
-            round_t0 = time.monotonic()
-            if pre_superstep is not None:
-                pre_superstep(step)
-            routed = blocks.route(frontier)
-            kernel_fn = _bind_step(kernel, step) if wants_step else kernel
-            msgs, _ = self._messages(
-                blocks, routed, kernel_fn, msg_schema,
-                prefilter_blocks=prefilter_blocks,
-            )
-            folded = (
-                msgs.groupBy("dst").agg(fold("msg").alias("msg")).persist()
-            )
-            n_msgs = folded.count()  # runs the kernels exactly once
-            if n_msgs == 0:
-                folded.unpersist()
-                metrics = {
-                    "active": 0,
-                    "superstep": step,
-                    "algorithm": algorithm,
-                    "round_sec": round(time.monotonic() - round_t0, 4),
-                    "active_buckets": 0,
-                }
-                self.history.append(metrics)
-                if post_superstep is not None:
-                    post_superstep(step, metrics)
-                break
-            active_buckets = sorted(
-                r[0]
-                for r in folded.select(
-                    store.bucket_expr(F.col("dst")).alias("b")
-                )
-                .distinct()
-                .collect()
-            )
-            raw = store.read_buckets_raw(active_buckets)
-            if strict:
-                # O(touched buckets), not O(|V|): an unknown dst hashes
-                # into its own bucket, and active_buckets covers every
-                # message's bucket — so the already-pruned `raw` read is
-                # a sufficient universe for the missing-vertex anti-join
-                # (a full-manifest read here made every strict round
-                # scan the whole store; r4 VERDICT "what's wrong" #1).
-                if raw is None:
-                    # n_msgs counts folded (distinct-dst) rows, not raw
-                    # messages — say so (ADVICE r5: keep the two strict
-                    # paths' diagnostics consistent)
-                    raise ValueError(
-                        f"Target vertex does not exist! ({n_msgs} distinct "
-                        "target id(s) absent from the vertex set)"
-                    )
-                unknown = (
-                    folded.select("dst")
-                    .join(
-                        raw.select(F.col("id").alias("dst")),
-                        on="dst",
-                        how="left_anti",
-                    )
-                    .count()
-                )
-                if unknown:
-                    raise ValueError(
-                        f"Target vertex does not exist! ({unknown} message(s) "
-                        "target ids absent from the vertex set)"
-                    )
-            if raw is None:
-                # no message targets any stored vertex -> nothing changes
-                folded.unpersist()
-                metrics = {
-                    "active": 0,
-                    "superstep": step,
-                    "algorithm": algorithm,
-                    "round_sec": round(time.monotonic() - round_t0, 4),
-                    "active_buckets": 0,
-                }
-                self.history.append(metrics)
-                if post_superstep is not None:
-                    post_superstep(step, metrics)
-                break
-            fol = (
-                F.broadcast(folded)
-                if n_msgs <= delta_broadcast_rows
-                else folded
-            )
-            cand = raw.join(fol, raw["id"] == fol["dst"], "inner")
-            cur = cand.groupBy("id").agg(
-                fold("value").alias("value"), fold("msg").alias("msg")
-            )
-            improved = (
-                F.col("msg") < F.col("value")
-                if monotone == "min"
-                else F.col("msg") > F.col("value")
-            )
-            delta = cur.filter(improved).select(
-                "id",
-                F.col("msg").alias("value"),
-                F.lit(True).alias("changed"),
-            )
-            obs = Observation(f"pcgraph_{algorithm}_step{step}")
-            exprs = metrics_exprs or [F.count(F.lit(1)).alias("changed")]
-            delta = (
-                delta.observe(obs, *exprs)
-                .select("id", "value")
-                .withColumn("bucket", store.bucket_expr(F.col("id")))
-            )
-            vid = store.write_delta(  # THE materializing action
-                delta,
-                num_partitions=min(
-                    int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                    len(active_buckets),
-                ),
-            )
-            folded.unpersist()
-            observed = dict(obs.get)
-            if metrics_exprs:
-                metrics = (
-                    metrics_post(observed, step) if metrics_post else observed
-                )
-            else:
-                metrics = {"active": int(observed["changed"] or 0)}
-            if "active" not in metrics:
-                metrics["active"] = int(observed.get("changed") or 0)
-            metrics.update(
-                superstep=step,
-                algorithm=algorithm,
-                round_sec=round(time.monotonic() - round_t0, 4),
-                active_buckets=len(active_buckets),
-                store_version=vid,
-            )
-            # protect the round's delta: its rows are the next frontier,
-            # read lazily below — compaction must not fold/delete it.
-            # Stagger to n_buckets/4 per round so a full-frontier phase
-            # (every bucket over budget at once) doesn't pay a
-            # full-state rewrite in a single round.
-            compacted = store.compact(
-                protect=vid, max_buckets=max(1, n_buckets // 4)
-            )
-            if compacted:
-                metrics["compacted_buckets"] = len(compacted)
-            new_frontier = (
-                store.read_version(vid)
-                if metrics["active"]
-                else empty_frontier
-            )
-            do_ckpt = (
-                self.checkpoint_dir is not None
-                and step % self.checkpoint_every == 0
-            )
-            if do_ckpt:
-                metrics_meta = dict(metrics)
-                metrics_meta["manifest"] = {
-                    str(b): list(vs) for b, vs in store.manifest.items()
-                }
-                metrics_meta["n_buckets"] = store.n_buckets
-                metrics_meta["monotone"] = monotone
-                metrics_meta["state_store_dir"] = _store_dir_for_meta(
-                    self.checkpoint_dir, state_store_dir
-                )
-                self._commit_round(
-                    blocks, step, new_frontier, metrics_meta,
-                    write_state=False,
-                )
-                store.mark_committed()
-            frontier = new_frontier
-            self.history.append(metrics)
-            if post_superstep is not None:
-                post_superstep(step, metrics)
-            if metrics.get("converged") or metrics["active"] == 0:
-                break
-        return store.read_reconciled(), self.history
-
-    # ------------------------------------------------------------------
     def _commit_round(
         self,
         blocks: GraphBlocks,
@@ -1060,20 +824,18 @@ class PCEngine:
         """Write frontier + meta for a checkpointed round (state already
         written); the atomic meta rename is the commit marker.
 
-        ``write_state=False`` is the incremental-store mode: the state
-        lives in the BucketedStateStore and the meta's ``manifest``
-        (bucket -> version) IS the state pointer — per-partition lineage
-        without re-copying the state."""
+        ``write_state=False`` is the delta-store mode: the state lives in
+        the DeltaStateStore and the meta's ``manifest`` (bucket ->
+        version list) IS the state pointer."""
         rdir = _round_dir(self.checkpoint_dir, step)
         frontier.write.mode("overwrite").parquet(
             os.path.join(rdir, "frontier.parquet")
         )
         meta = dict(metrics)
-        if self.partition_metrics:
-            pp = blocks.route(frontier).groupBy("partition_id").count().collect()
-            meta["frontier_rows_per_partition"] = {
-                int(r["partition_id"]): int(r["count"]) for r in pp
-            }
+        pp = blocks.route(frontier).groupBy("partition_id").count().collect()
+        meta["frontier_rows_per_partition"] = {
+            int(r["partition_id"]): int(r["count"]) for r in pp
+        }
         parent = step - self.checkpoint_every
         # Paths are stored RELATIVE to checkpoint_dir so a checkpoint
         # directory can be relocated (or live on a shared filesystem
@@ -1108,10 +870,12 @@ class PCEngine:
     def resume(self, checkpoint_dir: str) -> tuple[DataFrame, DataFrame, dict] | None:
         """Load (state, frontier, meta) of the latest committed round.
 
-        Incremental-store rounds carry a ``manifest`` instead of a
+        Delta-store rounds carry a ``manifest`` instead of a
         ``state_path``; the returned state is the store view at that
         round (callers pass ``meta['manifest']`` back through
-        ``run(resume_manifest=...)`` to continue incrementally)."""
+        ``run(resume_manifest=...)`` to continue incrementally).  A
+        scalar-valued manifest (written by the removed bucket-rewrite
+        store) raises ``ValueError``."""
         meta = self.latest_round(checkpoint_dir, self.spark)
         if meta is None:
             return None
@@ -1122,7 +886,6 @@ class PCEngine:
             return os.path.join(checkpoint_dir, p)
 
         if "manifest" in meta:
-            mf = meta["manifest"]
             # The committed round records where its store lives (a
             # caller-configured --state-store-dir need not be under the
             # checkpoint dir); pre-r5 metas lack the key and used the
@@ -1131,23 +894,14 @@ class PCEngine:
                 meta.get("state_store_dir", "statestore")
             )
             meta["state_store_dir_resolved"] = store_root
-            if any(isinstance(v, (list, tuple)) for v in mf.values()):
-                dstore = DeltaStateStore(
-                    self.spark,
-                    store_root,
-                    int(meta.get("n_buckets", 256)),
-                    monotone=meta.get("monotone", "min"),
-                )
-                dstore.restore(mf)
-                state = dstore.read_reconciled()
-            else:
-                store = BucketedStateStore(
-                    self.spark,
-                    store_root,
-                    int(meta.get("n_buckets", 256)),
-                )
-                store.restore(mf)
-                state = store.read_full()
+            store = DeltaStateStore(
+                self.spark,
+                store_root,
+                int(meta.get("n_buckets", 256)),
+                monotone=meta.get("monotone", "min"),
+            )
+            store.restore(meta["manifest"])
+            state = store.read_reconciled()
         else:
             state = self.spark.read.parquet(_abspath(meta["state_path"]))
         frontier = self.spark.read.parquet(_abspath(meta["frontier_path"]))

@@ -1,25 +1,28 @@
-"""Bucketed incremental state store — O(frontier) rounds for delta
-algorithms.
+"""Delta-version incremental state store — O(changed) rounds for
+monotone delta algorithms.
 
-The classic loop (engine._run_loop) materializes the WHOLE vertex state
-every round; for delta algorithms (CC tail, SSSP wavefront) that is an
-O(|V|) rewrite to move an 8-row frontier — measured as a flat ~4-5 s/
-round floor at 316M edges regardless of frontier size
-(BENCH/sssp_316m_r3.json), and at 100× scale it is THE structural
-scale-killer.  This store keeps the state hash-bucketed on disk and
-rewrites ONLY the buckets the round's messages touch:
+The checkpointed state backend (engine._CheckpointedState) materializes
+the WHOLE vertex state every round; for delta algorithms (CC tail, SSSP
+wavefront) that is an O(|V|) rewrite to move an 8-row frontier —
+measured as a flat ~4-5 s/round floor at 316M edges regardless of
+frontier size (BENCH/sssp_316m_r3.json).  When the algorithm's merge is
+an associative MIN or MAX (CC's component label, SSSP's distance), a
+round may instead append ONLY its changed rows as a new version, and any
+read reconciles duplicates with the same min/max the algorithm folds
+with — in any order:
 
-  * layout: ``root/v={step}/bucket={b}/*.parquet`` — append-only
-    versioned bucket directories, ``bucket = pmod(xxhash64(id), B)``;
-  * a driver-side MANIFEST maps bucket -> latest version; reading the
-    current state (or any active subset) is a pruned multi-path parquet
-    read; nothing is ever overwritten in place, so a crash mid-write
-    cannot corrupt a committed version;
+  * layout: ``root/v={vid}/bucket={b}/*.parquet`` — append-only version
+    directories, ``bucket = pmod(xxhash64(id), B)``; nothing is ever
+    overwritten in place, so a crash mid-write cannot corrupt a
+    committed version;
+  * a driver-side MANIFEST maps bucket -> ordered version list; reading
+    the current state (or any active subset) is a pruned multi-path
+    parquet read;
   * per-partition lineage (north rule): the manifest is persisted in
     every committed round's ``_meta.json``, so resume reconstructs the
-    exact bucket->version view of that round;
-  * superseded versions are garbage-collected as soon as no committed
-    round references them.
+    exact view of that round;
+  * versions superseded by compaction are garbage-collected as soon as
+    no committed round references them.
 
 Reserved column names: ``bucket`` and ``v`` are partition-discovery
 columns — state schemas must not use them.
@@ -29,8 +32,8 @@ delta-iteration workset join
 (/root/reference/src/main/java/org/apache/flink/graph/partition/centric/
 PartitionCentricIteration.java:104-112) where the runtime updates only
 changed solution-set entries in-place; this store is the Spark-native
-equivalent (Spark has no managed delta iteration, so the partition-wise
-upsert is made explicit).
+equivalent (Spark has no managed delta iteration, so the upsert is made
+explicit).
 """
 
 from __future__ import annotations
@@ -56,171 +59,22 @@ def default_state_dir(checkpoint_dir: str | None, algo: str) -> str:
     return tempfile.mkdtemp(prefix=f"pcgraph_{algo}_state_")
 
 
-class BucketedStateStore:
-    """Versioned, hash-bucketed vertex state with partition-wise upsert."""
-
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 256):
-        self.spark = spark
-        self.root = root
-        self.n_buckets = int(n_buckets)
-        # bucket -> latest version (the current state view)
-        self.manifest: dict[int, int] = {}
-        # bucket -> version referenced by the LAST COMMITTED round meta —
-        # those versions must survive until a newer round commits
-        self.committed: dict[int, int] = {}
-        # versions superseded while still committed-referenced: swept at
-        # the next commit
-        self._retired: list[str] = []
-
-    # ------------------------------------------------------------------
-    def bucket_expr(self, col):
-        # Cast to long BEFORE hashing: xxhash64 hashes by physical type,
-        # so an int32 vertex id and the same value as a long (message
-        # dst is always long per msg_schema) would land in different
-        # buckets — active-bucket pruning would then read the wrong
-        # buckets and silently drop updates.
-        return F.pmod(
-            F.xxhash64(col.cast("long")), F.lit(self.n_buckets)
-        ).cast("int")
-
-    def _vdir(self, step: int) -> str:
-        return os.path.join(self.root, f"v={step}")
-
-    def _bdir(self, step: int, bucket: int) -> str:
-        return os.path.join(self._vdir(step), f"bucket={bucket}")
-
-    def _written_buckets(self, step: int) -> list[int]:
-        return sorted(
-            int(name.split("=", 1)[1])
-            for name in fs_list_dirs(self.spark, self._vdir(step))
-            if name.startswith("bucket=")
-        )
-
-    # ------------------------------------------------------------------
-    def init(self, state: DataFrame, step: int = 0) -> None:
-        """Write the full initial state as version ``step`` (the one
-        O(|V|) job of the run) and seed the manifest.  A fresh run owns
-        the directory: stale versions from a previous run are cleared
-        (resume goes through ``restore`` instead)."""
-        fs_delete(self.spark, self.root)
-        (
-            state.withColumn("bucket", self.bucket_expr(F.col("id")))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._vdir(step))
-        )
-        self.manifest = {b: step for b in self._written_buckets(step)}
-
-    def restore(self, manifest: dict) -> None:
-        """Adopt a committed manifest (resume path): the referenced
-        version directories must still exist (GC never deletes versions
-        referenced by the latest committed round)."""
-        self.manifest = {int(b): int(v) for b, v in manifest.items()}
-        self.committed = dict(self.manifest)
-
-    # ------------------------------------------------------------------
-    def read_buckets(self, buckets: list[int]) -> DataFrame | None:
-        """Current state of the given buckets only — a partition-pruned
-        multi-path read, O(rows in those buckets).  None when no
-        requested bucket holds state."""
-        paths = [
-            self._bdir(self.manifest[b], b)
-            for b in buckets
-            if b in self.manifest
-        ]
-        if not paths:
-            return None
-        return (
-            self.spark.read.option("basePath", self.root)
-            .parquet(*paths)
-            .drop("v", "bucket")
-        )
-
-    def read_full(self) -> DataFrame:
-        """The complete current state across all bucket versions."""
-        paths = [self._bdir(v, b) for b, v in sorted(self.manifest.items())]
-        return (
-            self.spark.read.option("basePath", self.root)
-            .parquet(*paths)
-            .drop("v", "bucket")
-        )
-
-    def read_version(self, step: int) -> DataFrame:
-        """All rows written at version ``step`` (= the rows the round
-        touched; the per-round frontier source)."""
-        return self.spark.read.parquet(self._vdir(step)).drop("bucket")
-
-    # ------------------------------------------------------------------
-    def write_round(self, merged: DataFrame, step: int) -> list[int]:
-        """Materialize one round's merged active-bucket rows as version
-        ``step`` (THE round's action — any attached observe fires here),
-        advance the manifest, and GC superseded versions not referenced
-        by the last committed round.  Returns the written bucket ids.
-
-        ``merged`` must carry a ``bucket`` column and every row of every
-        active bucket (partition-wise upsert rewrites whole buckets).
-        The pre-write repartition on ``bucket`` keeps file counts at ~1
-        per bucket instead of tasks x buckets.
-        """
-        shuffle_p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        (
-            merged.repartition(shuffle_p, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self._vdir(step))
-        )
-        written = self._written_buckets(step)
-        for b in written:
-            prev = self.manifest.get(b)
-            self.manifest[b] = step
-            if prev is None or prev == step:
-                continue
-            old = self._bdir(prev, b)
-            if self.committed.get(b) == prev:
-                self._retired.append(old)  # swept at the next commit
-            else:
-                fs_delete(self.spark, old)
-        return written
-
-    def mark_committed(self) -> None:
-        """The current manifest was just persisted in a round meta:
-        versions retired while the previous commit referenced them are
-        now unreachable from any committed round — sweep them."""
-        self.committed = dict(self.manifest)
-        for path in self._retired:
-            fs_delete(self.spark, path)
-        self._retired = []
-
-
 class DeltaStateStore:
     """Versioned hash-bucketed state for MONOTONE delta algorithms —
-    per-round writes are O(changed rows), not O(touched buckets).
+    per-round writes are O(changed rows) (module docstring).
 
-    The bucket-rewrite model above (``BucketedStateStore``) makes a
-    round O(rows in touched buckets): messages from even a ~1k-row
-    frontier hash into every bucket, so mid-tail rounds still shuffle
-    and rewrite nearly the whole state (measured at 316M edges:
-    13.6 s/round at 173 active vertices vs this model's 9.0 s,
-    BENCH/sssp_inc_316m_r4.json tag=bucket-rewrite vs tag=delta).
-    When the algorithm's merge is an associative
-    MIN (CC's component label, SSSP's distance), full-bucket rewrites
-    are unnecessary: a round may append ONLY its changed rows as a new
-    version, and any read reconciles duplicates with ``min(value)`` per
-    id — the same merge the algorithm would have applied, in any order.
-
-      * layout: ``root/v={vid}/bucket={b}/*.parquet``; version ids are
-        store-allocated monotone ints (v0 = the full initial state,
-        later vids = per-round deltas or compactions);
+      * version ids are store-allocated monotone ints (v0 = the full
+        initial state, later vids = per-round deltas or compactions);
       * manifest: bucket -> ORDERED list of versions holding rows of
-        that bucket; the current value of an id is the min across all
-        its rows in those versions;
+        that bucket; the current value of an id is the min (resp. max)
+        across all its rows in those versions;
       * compaction: when a bucket's version list exceeds
         ``max_versions``, its versions are folded (min per id) into one
         new version — bounding read amplification at max_versions
         while keeping every round's write O(changed);
-      * crash safety / commit protocol: identical to
-        ``BucketedStateStore`` (append-only dirs, manifest persisted in
-        round meta, superseded dirs swept only after the next commit).
+      * commit protocol: the manifest is persisted in the round meta,
+        and dirs retired while a committed round still references them
+        are swept only after the next commit.
     """
 
     def __init__(
@@ -249,11 +103,29 @@ class DeltaStateStore:
         # long-valued (CC label) store
         self._value_type: str | None = None
 
-    # -- shared layout helpers ----------------------------------------
-    bucket_expr = BucketedStateStore.bucket_expr
-    _vdir = BucketedStateStore._vdir
-    _bdir = BucketedStateStore._bdir
-    _written_buckets = BucketedStateStore._written_buckets
+    # ------------------------------------------------------------------
+    def bucket_expr(self, col):
+        # Cast to long BEFORE hashing: xxhash64 hashes by physical type,
+        # so an int32 vertex id and the same value as a long (message
+        # dst is always long per msg_schema) would land in different
+        # buckets — active-bucket pruning would then read the wrong
+        # buckets and silently drop updates.
+        return F.pmod(
+            F.xxhash64(col.cast("long")), F.lit(self.n_buckets)
+        ).cast("int")
+
+    def _vdir(self, vid: int) -> str:
+        return os.path.join(self.root, f"v={vid}")
+
+    def _bdir(self, vid: int, bucket: int) -> str:
+        return os.path.join(self._vdir(vid), f"bucket={bucket}")
+
+    def _written_buckets(self, vid: int) -> list[int]:
+        return sorted(
+            int(name.split("=", 1)[1])
+            for name in fs_list_dirs(self.spark, self._vdir(vid))
+            if name.startswith("bucket=")
+        )
 
     def _agg(self, col):
         return F.min(col) if self.monotone == "min" else F.max(col)
@@ -276,6 +148,12 @@ class DeltaStateStore:
 
     def restore(self, manifest: dict) -> None:
         """Adopt a committed manifest (resume): bucket -> version list."""
+        if any(not isinstance(vs, (list, tuple)) for vs in manifest.values()):
+            raise ValueError(
+                "state manifest is scalar-valued (bucket -> version): it "
+                "was written by the bucket-rewrite state store, which was "
+                "removed — rerun the job from the start instead of resuming"
+            )
         self.manifest = {
             int(b): [int(v) for v in vs] for b, vs in manifest.items()
         }

@@ -198,3 +198,33 @@ def test_prefilter_blocks_records_active_partitions(spark):
     assert all(c == (1 if v % 2 else 2) for v, c in comps.items())
     assert all("active_partitions" in m for m in history)
     assert history[0]["active_partitions"] == 8
+
+
+def test_store_mode_takes_cached_grouped_map_fast_path(spark, tmp_path, monkeypatch):
+    """Store-mode rounds apply the kernel through the cached pandas UDF
+    and the private ``flatMapGroupsInPandas`` entry point; any failure
+    there silently falls back to the public ``applyInPandas``.  With the
+    public API made to raise, the run can only succeed — with the right
+    components — if the fast path is really taken."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from pcgraph.algos.cc import connected_components
+    from pcgraph.partition import ensure_block_store
+
+    pdf = fixtures.odd_even_graph(n=120)
+    edges = fixtures.to_spark_edges(spark, pdf)
+    store = ensure_block_store(
+        spark, symmetrize(edges), 4, str(tmp_path / "store"), tag="sym"
+    )
+    assert store.store_path is not None
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("grouped-map fallback taken")
+
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", refuse)
+    result, history = connected_components(spark, edges, blocks=store)
+    comps = {r["id"]: r["component"] for r in result.collect()}
+    assert comps == {v: 1 if v % 2 else 2 for v in pdf["src"]} | {
+        v: 1 if v % 2 else 2 for v in pdf["dst"]
+    }
+    assert history[-1]["active"] == 0

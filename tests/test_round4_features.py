@@ -210,10 +210,9 @@ def test_lsh_cap_releases_banded_cache(spark):
 
 
 # ------------------------------------------------ incremental state
-@pytest.mark.parametrize("delta", [True, False], ids=["delta", "bucket-rewrite"])
+@pytest.mark.parametrize("delta", [True], ids=["delta"])
 def test_incremental_cc_matches_classic(spark, tmp_path, delta):
-    """CC over the incremental state store (both models: delta-version
-    appends and bucket rewrites) must equal the classic
+    """CC over the delta-version state store must equal the classic
     full-materialization loop exactly, and tail rounds must touch a
     shrinking subset of buckets (the O(frontier) property)."""
     from pcgraph.algos.cc import connected_components
@@ -233,7 +232,7 @@ def test_incremental_cc_matches_classic(spark, tmp_path, delta):
     assert hist[-1]["active_buckets"] < hist[0]["active_buckets"]
 
 
-@pytest.mark.parametrize("delta", [True, False], ids=["delta", "bucket-rewrite"])
+@pytest.mark.parametrize("delta", [True], ids=["delta"])
 def test_incremental_sssp_matches_classic(spark, tmp_path, delta):
     import numpy as np
     import pandas as pd

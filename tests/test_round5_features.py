@@ -140,21 +140,33 @@ def test_store_dir_recorded_relative_when_under_checkpoint(spark, tmp_path):
     assert {r["id"]: r["component"] for r in resumed.collect()} == full_rows
 
 
-# --------------------------------------- manifest-shape dispatch error
+# --------------------------------------- removed bucket-rewrite store
 def test_delta_manifest_with_bucket_loop_raises_clear_error(spark, tmp_path):
-    """ADVICE r4: resuming a delta (list-valued) manifest with
-    delta=False used to route into BucketedStateStore.restore and die
-    with an opaque TypeError; it must raise a clear mismatch error."""
+    """The bucket-rewrite state store was removed: asking for it
+    (delta=False) and resuming a checkpoint it wrote (a scalar-valued
+    bucket -> version manifest) must both raise a clear ValueError, not
+    an opaque TypeError from deep inside the store."""
     edges = fixtures.to_spark_edges(spark, fixtures.odd_even_graph(n=80))
-    ckpt = str(tmp_path / "ckpt3")
-    connected_components(
-        spark, edges, num_partitions=4, incremental=True, delta=True,
-        checkpoint_dir=ckpt, max_iter=2, n_buckets=8,
-    )
-    with pytest.raises(ValueError, match="delta-versioned"):
+    with pytest.raises(ValueError, match="bucket-rewrite"):
         connected_components(
-            spark, edges, num_partitions=4, resume_from=ckpt,
+            spark, edges, num_partitions=4, incremental=True,
             delta=False, n_buckets=8,
+        )
+
+    ckpt = tmp_path / "ckpt3"
+    rdir = ckpt / "round=00002"
+    rdir.mkdir(parents=True)
+    meta = {
+        "superstep": 2, "active": 3, "committed": True,
+        "parent_round": 1, "frontier_path": "round=00002/frontier.parquet",
+        "manifest": {"0": 2, "1": 0}, "n_buckets": 8,
+        "state_store_dir": "statestore",
+    }
+    (rdir / "_meta.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="bucket-rewrite"):
+        connected_components(
+            spark, edges, num_partitions=4, resume_from=str(ckpt),
+            n_buckets=8,
         )
 
 
